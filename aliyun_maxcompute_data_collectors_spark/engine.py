@@ -737,14 +737,14 @@ class Engine:
         return self.spark.createDataFrame(
             [(d["path"], d["version"], d["operation"], d["timestamp_ms"],
               d["rows"], d["num_files"], d["size_bytes"],
-              d["num_file_segments"], d["num_stats_segments"],
-              d["num_removed_files"], ",".join(d["bloom_columns"]),
+              d["num_file_segments"], d["num_removed_files"],
+              ",".join(d["bloom_columns"]),
               d["num_versions"], d["num_dv_files"],
               d["dv_deleted_rows"])],
             "path string, version int, operation string, "
             "timestamp_ms long, rows long, num_files int, "
             "size_bytes long, num_file_segments int, "
-            "num_stats_segments int, num_removed_files int, "
+            "num_removed_files int, "
             "bloom_columns string, num_versions int, "
             "num_dv_files int, dv_deleted_rows long")
 

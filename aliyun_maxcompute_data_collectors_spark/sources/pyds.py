@@ -438,26 +438,15 @@ class _SnapshotWriter(DataSourceArrowWriter):
         rows = sum(m.rows for m in messages if m is not None)
         stats = {f: _collect_file_stats(f) for f in files}
         if self._overwrite:
-            pm = tab.manifest(self._parent)
             tab._commit_manifest(
-                self._parent, files, rows, "overwrite", stats=stats,
-                schema=(_written_schema(None, files)
-                        or self._write_schema_json),
-                delta_added=files, delta_removed=pm["files"])
+                self._parent, None, "overwrite", rows, add=files,
+                stats=stats, schema=(_written_schema(None, files)
+                                     or self._write_schema_json))
         else:
             pm = tab.manifest(self._parent)
-            pfsegs = pm.get("file_segments") or None
             tab._commit_manifest(
-                self._parent,
-                files if pfsegs else pm["files"] + files,
-                pm["rows"] + rows,
-                "append", stats={**(pm.get("stats") or {}), **stats},
-                schema=_written_schema(pm.get("schema"), files),
-                blooms=pm.get("blooms"),  # carry inline blooms (r10)
-                segments=pm.get("segments"), file_segments=pfsegs,
-                removed_files=pm.get("removed_files"),
-                delta_added=files, delta_removed=[],
-                dvs=pm.get("dvs"))
+                self._parent, pm, "append", pm["rows"] + rows, add=files,
+                stats=stats, schema=_written_schema(pm.get("schema"), files))
 
     def abort(self, messages):
         shutil.rmtree(self._stage, ignore_errors=True)
@@ -809,22 +798,9 @@ class _SnapshotStreamWriter(DataSourceStreamArrowWriter):
                 return  # replayed epoch: already published
             parent = tab.current_version()
             pm = tab.manifest(parent)
-            pfsegs = pm.get("file_segments") or None
             tab._commit_manifest(
-                parent,
-                files if pfsegs else pm["files"] + files,
-                pm["rows"] + rows, op,
-                stats={**(pm.get("stats") or {}), **stats},
-                schema=_written_schema(pm.get("schema"), files),
-                # carry the parent's inline blooms and - critically - its
-                # REMOVAL LIST: dropping removed_files on a segmented
-                # parent resurrected COW-deleted rows (r10 fix; the batch
-                # writer carried it since r9, this path did not)
-                blooms=pm.get("blooms"),
-                segments=pm.get("segments"), file_segments=pfsegs,
-                removed_files=pm.get("removed_files"),
-                delta_added=files, delta_removed=[],
-                dvs=pm.get("dvs"))
+                parent, pm, op, pm["rows"] + rows, add=files, stats=stats,
+                schema=_written_schema(pm.get("schema"), files))
 
         retry_on_conflict(publish)
 

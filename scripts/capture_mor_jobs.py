@@ -19,17 +19,17 @@ import shutil
 import sys
 import tempfile
 
-# the script's own delete sequence leaves one file 2/3 dead - legal for
-# the capture (the fraction bound is a production guard, env-tunable),
-# set BEFORE snapshots.py reads the env at import
-os.environ.setdefault("SPARK_GRAFT_MOR_MAX_DV_FRACTION", "0.7")
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from aliyun_maxcompute_data_collectors_spark import snapshots
 from aliyun_maxcompute_data_collectors_spark.session import get_spark, load_tables
 from aliyun_maxcompute_data_collectors_spark.snapshots import SnapshotTable
+
+# the script's own delete sequence leaves one file 2/3 dead - legal for
+# the capture (the fraction bound is a production guard)
+snapshots.MOR_MAX_DV_FRACTION = 0.7
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 

@@ -1,22 +1,25 @@
 """Measure snapshot-table manifest costs vs file count (VERDICT r7 #3).
 
-The single-JSON manifest carries the full file list + per-file stats
-(+ optional blooms) and is rewritten on EVERY commit; this script
-isolates the metadata costs from data IO by committing synthetic file
+Isolates the metadata costs from data IO by committing synthetic file
 lists through the real ``_commit_manifest`` / ``manifest()`` /
-``prune_files`` code paths:
+``prune_files`` / ``changes()`` planning code paths - no Spark:
 
 - commit latency: append 100 new files to a table already holding N
-  (parent manifest load + stats carry + json dump + fsync)
-- planning latency: manifest load + stats-based pruning of one conjunct
-- manifest size on disk
+- DML commit latency: drop 10 files (copy-on-write delete shape)
+- planning latency: manifest load + stats-based pruning of one
+  conjunct, cold (segment cache cleared) and warm
+- 50-version CDF range planning
+- manifest and segment size on disk
 
-Run:  python scripts/manifest_scale.py [--blooms]
-Output: one JSON line per (N, variant) -> SCALE.md curve.
+Run:  python scripts/manifest_scale.py [--blooms] [--inline-files K] [N ...]
+Output: one JSON line per N (default sizes below) -> SCALE.md curves.
+``--inline-files`` overrides the inline/segment threshold, to price
+both layouts at the same table size.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -40,26 +43,27 @@ def synth_bloom(m: int = 1 << 15) -> dict:
     return {"code": {"m": m, "hex": "ab" * (m // 8)}}
 
 
-def build_table(root: str, n_files: int, blooms: bool) -> SnapshotTable:
+def build_table(root: str, n_files: int, blooms: bool,
+                inline_files: int | None = None) -> SnapshotTable:
     os.makedirs(os.path.join(root, "_snapshots", "files"))
     os.makedirs(os.path.join(root, "_snapshots", "manifests"))
-    tab = SnapshotTable.__new__(SnapshotTable)
-    tab.spark = None
-    tab.path = root
-    tab._root = os.path.join(root, "_snapshots")
+    tab = SnapshotTable(None, root, inline_files=inline_files)
     files = [os.path.join(root, "_snapshots", "files", f"seed/{i:07d}.parquet")
              for i in range(n_files)]
     stats = {f: synth_stats(f, i) for i, f in enumerate(files)}
     bl = {f: synth_bloom() for f in files} if blooms else None
-    tab._commit_manifest(parent=None, files=files, rows=n_files * 1000,
-                         operation="append", stats=stats, blooms=bl)
+    tab._commit_manifest(None, None, "append", n_files * 1000, add=files,
+                         stats=stats, blooms=bl)
     return tab
 
 
-def bench_one(n_files: int, blooms: bool) -> dict:
+def bench_one(n_files: int, blooms: bool,
+              inline_files: int | None = None) -> dict:
+    from aliyun_maxcompute_data_collectors_spark.snapshots import _seg_cache_clear
+
     root = tempfile.mkdtemp(prefix=f"mscale_{n_files}_")
     try:
-        tab = build_table(root, n_files, blooms)
+        tab = build_table(root, n_files, blooms, inline_files)
         parent = tab.current_version()
         pm = tab.manifest(parent)
         new = [os.path.join(root, "_snapshots", "files",
@@ -68,24 +72,12 @@ def bench_one(n_files: int, blooms: bool) -> dict:
                      for i, f in enumerate(new)}
         new_bl = ({f: synth_bloom() for f in new} if blooms else None)
         t0 = time.perf_counter()
-        carried_bl = dict(pm.get("blooms") or {})
-        if new_bl:
-            carried_bl.update(new_bl)
-        # mirror SnapshotTable.append exactly: a segmented parent passes
-        # ONLY the new files (its list lives in immutable file segments)
-        pfsegs = pm.get("file_segments") or None
-        all_files = new if pfsegs else pm["files"] + new
-        tab._commit_manifest(
-            parent, all_files, pm["rows"] + 100 * 1000, "append",
-            stats={**(pm.get("stats") or {}), **new_stats},
-            blooms=carried_bl or None, segments=pm.get("segments"),
-            file_segments=pfsegs)
+        tab._commit_manifest(parent, pm, "append", pm["rows"] + 100 * 1000,
+                             add=new, stats=new_stats, blooms=new_bl)
         commit_s = time.perf_counter() - t0
         # planning: cold manifest load + one-conjunct prune.  Clear the
-        # segment cache so "cold" really pays the segment decode (r10;
-        # the r9 number was semi-warm - the preceding commit had loaded
-        # the segments already)
-        from aliyun_maxcompute_data_collectors_spark.snapshots import _seg_cache_clear
+        # segment cache so "cold" really pays the segment decode (the
+        # preceding commit had loaded the segments already)
         _seg_cache_clear()
         t0 = time.perf_counter()
         m = tab.manifest()
@@ -97,32 +89,13 @@ def bench_one(n_files: int, blooms: bool) -> dict:
         tab.prune_files(tab.manifest(), [("id", "between",
                                           (5_000, 9_000))])
         plan_warm_s = time.perf_counter() - t0
-        # COW DML commit (r9 removal lists): drop 10 files from the
-        # table - mirrors SnapshotTable._publish_cow exactly.  On a
-        # segmented parent the carried segments ride unchanged and the
-        # 10 paths land on the manifest's removal list (O(touched));
-        # inline parents rewrite the list directly (O(table) JSON).
+        # COW DML commit: drop 10 files from the table, as
+        # SnapshotTable.delete does for whole-file matches
         m2 = tab.manifest()
         touched = m2["files"][:10]
-        tset = set(touched)
         t0 = time.perf_counter()
-        if m2.get("file_segments"):
-            tab._commit_manifest(
-                tab.current_version(), [], m2["rows"] - 10 * 1000,
-                "delete", stats={}, segments=m2.get("segments"),
-                file_segments=m2["file_segments"],
-                removed_files=list(m2.get("removed_files") or []) + touched)
-        else:
-            from aliyun_maxcompute_data_collectors_spark.snapshots import resolve_stats
-            all_stats, all_blooms = resolve_stats(m2)
-            keep = [f for f in m2["files"] if f not in tset]
-            kset = set(keep)
-            tab._commit_manifest(
-                tab.current_version(), keep, m2["rows"] - 10 * 1000,
-                "delete",
-                stats={f: s for f, s in all_stats.items() if f in kset},
-                blooms={f: b for f, b in all_blooms.items()
-                        if f in kset} or None)
+        tab._commit_manifest(tab.current_version(), m2, "delete",
+                             m2["rows"] - 10 * 1000, remove=touched)
         dml_commit_s = time.perf_counter() - t0
         assert len(tab.manifest()["files"]) == len(m2["files"]) - 10
         # manifest/segment footprint of the steady-state table, captured
@@ -133,29 +106,19 @@ def bench_one(n_files: int, blooms: bool) -> dict:
             for f in os.listdir(os.path.join(tab._root, "manifests"))
             if f.startswith("seg-"))
         # CDF RANGE PLANNING over 50 commits (r11, VERDICT r10 #3): 49
-        # more appends (100 files each, recording per-commit deltas as
-        # SnapshotTable.append does) + the DML commit above, then plan
-        # the whole range TRUE-cold through the exact changes() planner.
-        # Pre-r11 this materialized every version's full list -
-        # O(versions x files), ~100x the cold materialize at 1e6; now
-        # it reads 50 raw manifest JSONs + their O(delta) lists.
+        # more appends of 100 files each + the DML commit above, then
+        # plan the whole range TRUE-cold through the exact changes()
+        # planner (50 raw manifest JSONs + their O(delta) lists)
         cdf_since = tab.current_version()
         for c in range(49):
             pmc = tab.manifest()
             newc = [os.path.join(root, "_snapshots", "files",
                                  f"cdf{c:02d}/{i:05d}.parquet")
                     for i in range(100)]
-            pfsegs_c = pmc.get("file_segments") or None
             tab._commit_manifest(
-                tab.current_version(),
-                newc if pfsegs_c else pmc["files"] + newc,
-                pmc["rows"] + 100 * 1000, "append",
-                stats={**(pmc.get("stats") or {}),
-                       **{f: synth_stats(f, i) for i, f in enumerate(newc)}},
-                blooms=pmc.get("blooms"), segments=pmc.get("segments"),
-                file_segments=pfsegs_c,
-                removed_files=pmc.get("removed_files"),
-                delta_added=newc, delta_removed=[])
+                tab.current_version(), pmc, "append",
+                pmc["rows"] + 100 * 1000, add=newc,
+                stats={f: synth_stats(f, i) for i, f in enumerate(newc)})
         _seg_cache_clear()
         t0 = time.perf_counter()
         plan = tab._plan_change_range(cdf_since, tab.current_version())
@@ -163,6 +126,7 @@ def bench_one(n_files: int, blooms: bool) -> dict:
         assert plan is not None
         assert sum(len(s[2]) for s in plan) == 49 * 100
         return {"n_files": n_files, "blooms": blooms,
+                "inline_files": tab.inline_files,
                 "commit_s": round(commit_s, 4),
                 "dml_commit_s": round(dml_commit_s, 4),
                 "plan_s": round(plan_s, 4),
@@ -175,10 +139,15 @@ def bench_one(n_files: int, blooms: bool) -> dict:
 
 
 if __name__ == "__main__":
-    blooms = "--blooms" in sys.argv
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--blooms", action="store_true")
+    ap.add_argument("--inline-files", type=int, default=None)
+    ap.add_argument("sizes", nargs="*", type=int)
+    args = ap.parse_args()
     # 1e6 files ~ 128 TB at 128 MB/file: the file-list segmentation
     # target point (VERDICT r8 #1 done-criteria)
-    sizes = ([1_000, 10_000, 100_000, 1_000_000] if not blooms
-             else [1_000, 10_000])
+    sizes = args.sizes or ([200, 1_000, 4_000, 10_000, 100_000, 1_000_000]
+                           if not args.blooms else [200, 1_000, 4_000, 10_000])
     for n in sizes:
-        print(json.dumps(bench_one(n, blooms)), flush=True)
+        print(json.dumps(bench_one(n, args.blooms, args.inline_files)),
+              flush=True)

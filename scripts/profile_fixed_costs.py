@@ -112,14 +112,9 @@ def prof_delete_mor_phases(spark, reps: int = 3):
                                             per_file, mapped)
             t.mark("dv_entries")
             n_del = sum(per_file.values())
-            tab._commit_manifest(
-                parent, m["files"], m["rows"] - n_del, "delete-mor",
-                stats=m.get("stats"), schema=m.get("schema"),
-                blooms=m.get("blooms"), segments=m.get("segments"),
-                file_segments=m.get("file_segments") or None,
-                removed_files=m.get("removed_files"),
-                delta_added=[], delta_removed=[], dvs=dvs,
-                delta_dv=delta_dv)
+            tab._commit_manifest(parent, m, "delete-mor",
+                                 m["rows"] - n_del, dvs=dvs,
+                                 delta_dv=delta_dv)
             t.mark("commit_manifest")
             t.dump(f"delete_mor phases rep{rep}")
         finally:

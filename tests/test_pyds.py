@@ -544,7 +544,7 @@ def test_snapshot_cdf_batch_version_range(spark, orders, root, pushdown):
 
 
 def test_stream_sink_carries_removals_and_blooms(spark, orders, root,
-                                                 pushdown):
+                                                 pushdown, monkeypatch):
     """r10 wrong-answer fix: the stream sink's epoch commit used to drop
     the parent's REMOVAL LIST on a file-list-segmented table - a stream
     epoch after a COW DELETE resurrected the deleted rows.  It also
@@ -552,13 +552,17 @@ def test_stream_sink_carries_removals_and_blooms(spark, orders, root,
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    import aliyun_maxcompute_data_collectors_spark.snapshots as S
     from aliyun_maxcompute_data_collectors_spark.snapshots import resolve_stats
     from aliyun_maxcompute_data_collectors_spark.sources.pyds import (
         _FileCommit,
         _SnapshotStreamWriter,
     )
 
-    tab = SnapshotTable.init(spark, root, inline_files=1)
+    # module constant, not inline_files=1: the sink opens its own
+    # SnapshotTable, and the epoch commit must stay segmented too
+    monkeypatch.setattr(S, "INLINE_FILES", 1)
+    tab = SnapshotTable.init(spark, root)
     m = F.col("o_orderkey") % 10
     for v in (0, 1, 2):
         tab.append(orders.where(m == v).coalesce(1), bloom_cols=["o_orderkey"])
@@ -580,10 +584,12 @@ def test_stream_sink_carries_removals_and_blooms(spark, orders, root,
     # segment-held blooms survive (the %10==1 file was a whole-file
     # drop, so exactly the two other bloom'd appends remain live)
     mf = tab.manifest()
+    assert mf.get("file_segments") and mf.get("removed_files")
     _, blooms = resolve_stats(mf)
     with_bloom = [x for x in mf["files"]
                   if blooms.get(x, {}).get("o_orderkey")]
     assert len(with_bloom) == 2
+    monkeypatch.undo()
 
     # INLINE blooms (non-segmented manifest) are the path the fix
     # touches directly: they must carry across an epoch commit too
@@ -623,13 +629,13 @@ def test_stream_sink_retries_on_concurrent_commit(spark, orders, root,
     state = {"fired": False}
 
     class Hooked(SnapshotTable):
-        def _commit_manifest(self, parent, files, rows, operation, **kw):
+        def _commit_manifest(self, parent, base, operation, rows, **kw):
             if operation.startswith("stream-append") and not state["fired"]:
                 state["fired"] = True
                 SnapshotTable(spark, root).append(
                     orders.where(m == 1).coalesce(1))
-            return super()._commit_manifest(parent, files, rows,
-                                            operation, **kw)
+            return super()._commit_manifest(parent, base, operation,
+                                            rows, **kw)
 
     monkeypatch.setattr(P, "SnapshotTable", Hooked)
     sw = _SnapshotStreamWriter(root)

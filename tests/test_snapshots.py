@@ -72,9 +72,11 @@ def test_conflicting_commit_raises(spark, table):
     table.append(_df(spark, [(1, "a")]))
     files, n, _stats = table._write_files(_df(spark, [(2, "b")]))
     stale_parent = table.current_version()
+    stale = table.manifest(stale_parent)
     table.append(_df(spark, [(3, "c")]))  # someone else commits first
     with pytest.raises(SnapshotConflict, match="no longer HEAD"):
-        table._commit_manifest(stale_parent, files, n, "append")
+        table._commit_manifest(stale_parent, stale, "append",
+                               stale["rows"] + n, add=files)
 
 
 def test_read_merge_overwrite_without_checkpoint(spark, table):
@@ -785,25 +787,29 @@ def test_rollback_to_version_with_missing_files_fails_before_commit(
 
 
 def test_stats_segmentation_end_to_end(spark, table, monkeypatch):
-    """r8 manifest segmentation (VERDICT r7 #3): past INLINE_STATS_FILES
-    entries, per-commit stats/blooms land in immutable side files and the
-    manifest carries only their paths - append metadata is O(new files).
-    Threshold patched low so the transition, pruning-through-segments,
-    compact carry, rollback, and vacuum cleanup all run cheap."""
+    """Past INLINE_FILES files the file list, stats and blooms move
+    TOGETHER into immutable parquet segments and the manifest carries
+    only their paths - append metadata is O(new files).  Threshold
+    patched low so the transition, pruning-through-segments, compact
+    back to inline, rollback, and vacuum cleanup all run cheap."""
     import json as _json
+
+    import pyarrow.parquet as pq
 
     import aliyun_maxcompute_data_collectors_spark.snapshots as S
 
-    monkeypatch.setattr(S, "INLINE_STATS_FILES", 1)
+    monkeypatch.setattr(S, "INLINE_FILES", 1)
     df1 = _df(spark, [(1, "a"), (2, "b")]).coalesce(1)
     table.append(df1)                               # 1 file: inline
-    assert "segments" not in table.manifest()
-    table.append(_df(spark, [(10, "c")]).coalesce(1))  # 2 entries: crosses
+    raw = _json.load(open(table._manifest_path(table.current_version())))
+    assert "file_segments" not in raw and len(raw["stats"]) == 1
+    table.append(_df(spark, [(10, "c")]).coalesce(1))  # 2 files: crosses
     m = table.manifest()
-    assert m["stats"] == {} and len(m["segments"]) == 1
-    # the segment holds the FULL migrated stats (old + new files)
-    seg = _json.loads(open(m["segments"][0]).read())
-    assert set(seg["stats"]) == set(m["files"])
+    assert m["stats"] == {} and len(m["file_segments"]) == 1
+    # the crossing segment holds the FULL migrated stats (old + new files)
+    seg = pq.read_table(m["file_segments"][0])
+    assert sorted(seg.column("file").to_pylist()) == sorted(m["files"])
+    assert seg.column("s_lo:id").null_count == 0
     # pruning resolves through segments: only the id<=2 file scans
     assert len(table.prune_files(m, [("id", "<=", 2)])) == 1
     got = sorted(r["id"] for r in table.read(where=("id", "<=", 2)).collect())
@@ -811,24 +817,22 @@ def test_stats_segmentation_end_to_end(spark, table, monkeypatch):
     # a further append adds ONE new segment with only ITS files
     table.append(_df(spark, [(20, "d")]).coalesce(1))
     m2 = table.manifest()
-    assert len(m2["segments"]) == 2
-    seg2 = _json.loads(open(m2["segments"][1]).read())
-    assert len(seg2["stats"]) == 1
-    # compact CONSOLIDATES metadata (r9, VERDICT r8 #5): carried segments
-    # are resolved and re-committed fresh - the single rewritten file's
-    # stats fit inline again at this threshold
+    assert len(m2["file_segments"]) == 2
+    assert pq.read_table(m2["file_segments"][1]).num_rows == 1
+    # compact rewrites the three files as one: back inline at this
+    # threshold, carried segments folded away
     table.compact(target_file_bytes=1 << 20)
     m3 = table.manifest()
-    assert not m3.get("segments")
+    assert not m3.get("file_segments") and len(m3["files"]) == 1
     assert sorted(r["id"] for r in table.read().collect()) == [1, 2, 10, 20]
     # rollback carries the segment list verbatim
     table.rollback(m2["version"])
-    assert table.manifest()["segments"] == m2["segments"]
+    assert table.manifest()["file_segments"] == m2["file_segments"]
     assert len(table.prune_files(table.manifest(),
                                  [("id", "<=", 2)])) == 1
     # vacuum keeps segments a surviving manifest references
     table.vacuum(keep_last=1)
-    live_segs = set(table.manifest().get("segments") or [])
+    live_segs = set(table.manifest().get("file_segments") or [])
     assert live_segs  # current still segmented...
     assert all(os.path.exists(s) for s in live_segs)  # ...and intact
     assert sorted(r["id"] for r in table.read().collect()) == [1, 2, 10, 20]
@@ -849,7 +853,7 @@ def test_segmented_blooms_prune_and_pyds_pushdown(spark, table, monkeypatch):
         register_python_datasources,
     )
 
-    monkeypatch.setattr(S, "INLINE_STATS_FILES", 1)
+    monkeypatch.setattr(S, "INLINE_FILES", 1)
     rows = [(i, f"k{i:04d}") for i in range(40)]
     df = spark.createDataFrame(rows, "id long, code string")
     table.append(df.where(F.col("id") < 20).coalesce(1),
@@ -857,7 +861,7 @@ def test_segmented_blooms_prune_and_pyds_pushdown(spark, table, monkeypatch):
     table.append(df.where(F.col("id") >= 20).coalesce(1),
                  bloom_cols=["code"])
     m = table.manifest()
-    assert m.get("segments") and "blooms" not in m
+    assert m.get("file_segments") and "blooms" not in m
     # absent key: zero files scan; present key: one file
     assert table.prune_files(m, [("code", "==", "nope")]) == []
     assert len(table.prune_files(m, [("code", "==", "k0005")])) == 1
@@ -908,6 +912,8 @@ def test_file_list_segmentation_end_to_end(spark, table, monkeypatch):
     changes/vacuum) behaves identically to the inline layout."""
     import json as _json
 
+    import pyarrow.parquet as pq
+
     import aliyun_maxcompute_data_collectors_spark.snapshots as S
 
     monkeypatch.setattr(S, "INLINE_FILES", 2)
@@ -929,8 +935,8 @@ def test_file_list_segmentation_end_to_end(spark, table, monkeypatch):
     table.append(_df(spark, [(20, "d")]).coalesce(1))
     m2 = table.manifest()
     assert len(m2["file_segments"]) == 2
-    seg2 = _json.load(open(m2["file_segments"][1]))
-    assert len(seg2["files"]) == 1 and len(m2["files"]) == 4
+    seg2 = pq.read_table(m2["file_segments"][1])
+    assert seg2.num_rows == 1 and len(m2["files"]) == 4
     # stats ride the file segments: interval pruning still resolves -
     # every file carries stats now, so the point read prunes to 1 of 4
     assert len(table.prune_files(m2, [("id", "==", 20)])) == 1
@@ -985,8 +991,7 @@ def test_file_segment_auto_consolidation(spark, table, monkeypatch):
     for i in range(8):
         table.append(_df(spark, [(i, f"r{i}")]).coalesce(1))
     m = table.manifest()
-    n_segs = len(m.get("file_segments") or []) + len(m.get("segments") or [])
-    assert n_segs <= 3
+    assert len(m.get("file_segments") or []) <= 3
     assert sorted(r["id"] for r in table.read().collect()) == list(range(8))
     # stats survived every fold: point prune still hits exactly one file
     assert len(table.prune_files(m, [("id", "==", 5)])) == 1
@@ -1007,7 +1012,6 @@ def test_consolidate_metadata_is_metadata_only(spark, table, monkeypatch):
     after = table.manifest()
     assert after["version"] == v == before["version"] + 1
     assert len(after.get("file_segments") or []) == 1
-    assert not after.get("segments")
     assert after["files"] == before["files"]          # same bytes, same order
     assert table.changes(before["version"], v).count() == 0
     assert sorted(r["id"] for r in table.read().collect()) == [0, 1, 2, 3]
@@ -1052,25 +1056,23 @@ def test_legacy_nan_stats_do_not_brick_commits(spark, table):
 def test_segment_cache_bounded_by_bytes(tmp_path, monkeypatch):
     """VERDICT r8 #4: the segment cache is bounded by BYTES, not entries
     - 64 huge bloom segments can no longer pin multi-GB driver RSS."""
-    import json as _json
-
     import aliyun_maxcompute_data_collectors_spark.snapshots as S
 
     S._seg_cache_clear()
-    monkeypatch.setattr(S, "SEG_CACHE_MAX_BYTES", 4096)
     paths = []
     for i in range(8):
-        p = str(tmp_path / f"seg-{i}.json")
-        with open(p, "w") as fh:
-            fh.write(_json.dumps({"files": [f"f{i}-{'x' * 900}"]}))
+        p = str(tmp_path / f"seg-{i}.parquet")
+        S._write_parquet_segment(p, [f"f{i}-{os.urandom(450).hex()}"],
+                                 {}, {})
         paths.append(p)
-    for p in paths:
-        got = S._load_segment(p)
-        assert got["files"][0].startswith(f"f{paths.index(p)}")
-    assert S._SEG_CACHE_BYTES <= 4096
+    size = os.path.getsize(paths[0])
+    monkeypatch.setattr(S, "SEG_CACHE_MAX_BYTES", 3 * size)
+    for i, p in enumerate(paths):
+        assert S._load_segment(p).files[0].startswith(f"f{i}-")
+    assert S._SEG_CACHE_BYTES <= 3 * size
     assert len(S._SEG_CACHE) < len(paths)
     # evicted entries reload correctly (immutable -> same content)
-    assert S._load_segment(paths[0])["files"][0].startswith("f0")
+    assert S._load_segment(paths[0]).files[0].startswith("f0-")
     S._seg_cache_clear()
 
 
@@ -1086,13 +1088,10 @@ def test_long_lived_table_segment_growth_bounded(tmp_path):
     root = str(tmp_path / "ll")
     os.makedirs(os.path.join(root, "_snapshots", "files"))
     os.makedirs(os.path.join(root, "_snapshots", "manifests"))
-    tab = SnapshotTable.__new__(SnapshotTable)
-    tab.spark = None
-    tab.path = root
-    tab._root = os.path.join(root, "_snapshots")
-    tab._commit_manifest(parent=None, files=[], rows=0, operation="init")
+    tab = SnapshotTable(None, root)
+    tab._commit_manifest(None, None, "init", 0)
     n_commits = 500
-    per = 12  # 500 * 12 = 6000 files > INLINE_FILES=4096 -> segmented
+    per = 12  # 500 * 12 = 6000 files > INLINE_FILES -> segmented
     for c in range(n_commits):
         new = [os.path.join(root, "_snapshots", "files",
                             f"s{c:04d}/{i:02d}.parquet") for i in range(per)]
@@ -1100,15 +1099,11 @@ def test_long_lived_table_segment_growth_bounded(tmp_path):
                  for i, f in enumerate(new)}
         parent = tab.current_version()
         pm = tab.manifest(parent)
-        pfsegs = pm.get("file_segments") or None
-        tab._commit_manifest(
-            parent, new if pfsegs else pm["files"] + new,
-            pm["rows"] + per, "append",
-            stats={**(pm.get("stats") or {}), **stats},
-            segments=pm.get("segments"), file_segments=pfsegs)
+        tab._commit_manifest(parent, pm, "append", pm["rows"] + per,
+                             add=new, stats=stats)
     m = tab.manifest()
     assert len(m["files"]) == n_commits * per
-    n_segs = len(m.get("file_segments") or []) + len(m.get("segments") or [])
+    n_segs = len(m.get("file_segments") or [])
     assert 0 < n_segs <= S.MAX_SEGMENTS
     # the manifest on disk stays O(segments), not O(files)
     raw = _json.load(open(tab._manifest_path(m["version"])))
@@ -1118,7 +1113,7 @@ def test_long_lived_table_segment_growth_bounded(tmp_path):
     assert len(tab.prune_files(m, [("id", "==", 1234)])) == 1
     # every physical segment on disk is referenced (no leak of orphans
     # beyond the pre-fold generations vacuum would sweep)
-    live = set(m.get("file_segments") or []) | set(m.get("segments") or [])
+    live = set(m.get("file_segments") or [])
     assert all(os.path.exists(s) for s in live)
 
 
@@ -1855,7 +1850,7 @@ def test_per_instance_thresholds_no_global_mutation(spark, tmp_path):
     import aliyun_maxcompute_data_collectors_spark.snapshots as S
 
     before = (S.INLINE_FILES, S.MAX_SEGMENTS, S.REMOVED_FILES_MAX,
-              S.INLINE_STATS_FILES)
+              S.DELTA_INLINE_MAX)
     t = SnapshotTable.init(spark, str(tmp_path / "pi"), inline_files=2)
     for lo in range(0, 400, 100):
         t.append(_kv(spark, lo, lo + 100).coalesce(1))
@@ -1868,8 +1863,11 @@ def test_per_instance_thresholds_no_global_mutation(spark, tmp_path):
     t2 = SnapshotTable(spark, str(tmp_path / "pi"))
     assert t2.inline_files == S.INLINE_FILES
     assert t2.read().count() == 400
+    # the one layout knob: no other threshold is a constructor parameter
+    with pytest.raises(TypeError):
+        SnapshotTable(spark, str(tmp_path / "pi"), max_segments=3)
     assert (S.INLINE_FILES, S.MAX_SEGMENTS, S.REMOVED_FILES_MAX,
-            S.INLINE_STATS_FILES) == before
+            S.DELTA_INLINE_MAX) == before
 
 
 def test_sql_dml_rebuilds_blooms(spark, tmp_path):
@@ -1947,15 +1945,11 @@ def test_unmappable_phase1_hit_raises(spark, dml_table, monkeypatch):
 # -- r10: parquet segments + vectorized prune -------------------------------
 
 def test_parquet_segments_roundtrip(spark, tmp_path, monkeypatch):
-    """VERDICT r9 #6: big segments are written as PARQUET (threshold
-    patched to 1 so small tables exercise the path) and every consumer
+    """VERDICT r9 #6: segments are PARQUET side files and every consumer
     - materialize, read, time travel, prune, DML removal lists, fold,
-    vacuum - behaves identically to the JSON layout."""
+    vacuum - behaves identically to the inline layout."""
     import json as _json
 
-    import aliyun_maxcompute_data_collectors_spark.snapshots as S
-
-    monkeypatch.setattr(S, "PARQUET_SEG_MIN_FILES", 1)
     t = SnapshotTable.init(spark, str(tmp_path / "pqseg"), inline_files=2)
     for lo in range(0, 1000, 250):
         t.append(_kv(spark, lo, lo + 250).coalesce(1), bloom_cols=["k"])
@@ -1988,68 +1982,86 @@ def test_parquet_segments_roundtrip(spark, tmp_path, monkeypatch):
     assert t.read().count() == 900
 
 
-def test_parquet_segment_fallback_is_narrow_and_loud(spark, tmp_path,
-                                                     monkeypatch, caplog):
-    """VERDICT r10 #2: _write_segment used to swallow EVERY exception
-    into a silent JSON fallback - a pyarrow regression would quietly
-    degrade all future segments (0.3 s cold plan -> seconds, zero
-    signal).  Now: a normal payload always lands as .parquet, an
-    expected stat-typing error falls back WITH a warning log, and an
-    unexpected error propagates instead of degrading silently."""
-    import logging
+def test_parquet_segment_fallback_is_narrow_and_loud(tmp_path):
+    """A stat column whose values do not fit one arrow type (here int
+    in one file, float in another) records NO stats in that segment -
+    never a silent coercion (int64 folded into float64 can mis-prune) -
+    and the prune then keeps every file on that column, as it does for
+    NaN stats.  Other columns of the same segment keep their stats."""
+    import pyarrow.parquet as pq
+
+    import aliyun_maxcompute_data_collectors_spark.snapshots as S
+    from aliyun_maxcompute_data_collectors_spark.snapshots import (
+        prune_manifest_files,
+    )
+
+    files = ["a.parquet", "b.parquet"]
+    stats = {"a.parquet": {"c": [1, 2], "k": [0, 9]},
+             "b.parquet": {"c": [1.5, 2.5], "k": [10, 19]}}  # c: int vs float
+    seg = S._write_parquet_segment(str(tmp_path / "seg-mixed.parquet"),
+                                   files, stats, {})
+    names = pq.read_table(seg).schema.names
+    assert "s_lo:k" in names and not any(n.endswith(":c") for n in names)
+    S._seg_cache_clear()
+    m = {"files": files, "file_segments": [seg], "stats": {}}
+    # c prunes nothing (the inline layout would have pruned b.parquet)
+    assert prune_manifest_files(m, [("c", "<", 1.2)]) == files
+    assert prune_manifest_files({"files": files, "stats": stats},
+                                [("c", "<", 1.2)]) == ["a.parquet"]
+    # k still prunes through the same segment
+    assert prune_manifest_files(m, [("k", ">=", 10)]) == ["b.parquet"]
+
+
+def test_legacy_segment_layouts_raise_naming_the_file(spark, tmp_path):
+    """The stats-only ``segments`` manifest layout and JSON segments are
+    gone with no reader kept: a manifest carrying either raises
+    SnapshotError naming the offending file, never a silent misread."""
+    import json as _json
 
     import aliyun_maxcompute_data_collectors_spark.snapshots as S
 
-    monkeypatch.setattr(S, "PARQUET_SEG_MIN_FILES", 1)
-    t = SnapshotTable.init(spark, str(tmp_path / "nf"), inline_files=1)
-
-    # 1. standard commit: parquet, no fallback log
-    with caplog.at_level(logging.WARNING,
-                         logger="aliyun_maxcompute_data_collectors_spark.snapshots"):
-        t.append(_kv(spark, 0, 100).coalesce(1), bloom_cols=["k"])
-        t.append(_kv(spark, 100, 200).coalesce(1), bloom_cols=["k"])
-    segs = t.manifest().get("file_segments") or []
-    assert segs and all(s.endswith(".parquet") for s in segs)
-    assert "fallback" not in caplog.text
-
-    # 2. expected typing error (mixed stat types): JSON fallback + log
-    seg = t._write_segment(99, {
-        "files": ["a.parquet", "b.parquet"],
-        "stats": {"a.parquet": {"c": [1, 2]},
-                  "b.parquet": {"c": [1.5, 2.5]}}})  # int vs float: mixed
-    assert seg.endswith(".json")
-    assert "fallback to JSON" in caplog.text
-
-    # 3. unexpected error propagates (no silent degrade)
-    def boom(path, payload):
-        raise RuntimeError("pyarrow regression")
-    monkeypatch.setattr(S, "_write_parquet_segment", boom)
-    with pytest.raises(RuntimeError, match="pyarrow regression"):
-        t._write_segment(100, {"files": ["a.parquet"]})
+    t = SnapshotTable.init(spark, str(tmp_path / "legacy"))
+    t.append(_df(spark, [(1, "a")]).coalesce(1))
+    mpath = t._manifest_path(t.current_version())
+    raw = _json.load(open(mpath))
+    legacy_seg = os.path.join(t._root, "manifests", "seg-00000002-x.json")
+    with open(legacy_seg, "w") as fh:
+        fh.write(_json.dumps({"files": raw["files"], "stats": raw["stats"]}))
+    with open(mpath, "w") as fh:
+        fh.write(_json.dumps({**raw, "stats": {}, "segments": [legacy_seg]}))
+    with pytest.raises(SnapshotError, match=os.path.basename(mpath)):
+        t.manifest()
+    with open(mpath, "w") as fh:
+        fh.write(_json.dumps({**raw, "files": [], "stats": {},
+                              "file_segments": [legacy_seg]}))
+    S._seg_cache_clear()
+    with pytest.raises(SnapshotError, match="seg-00000002-x.json"):
+        t.read()
 
 
 def test_parquet_segment_stats_dict_matches_json(spark, tmp_path,
                                                  monkeypatch):
-    """The lazy stats/blooms dicts decoded from a parquet segment equal
-    what the JSON layout would have stored (same _stat_to_json
-    encodings), so resolve_stats consumers see identical values."""
+    """The stats/blooms dicts decoded from a parquet segment equal the
+    inline manifest's for the same data (same _stat_to_json encodings
+    across int, double, timestamp and date columns), so resolve_stats
+    consumers see identical values on both sides of the threshold."""
     import aliyun_maxcompute_data_collectors_spark.snapshots as S
     from aliyun_maxcompute_data_collectors_spark.snapshots import resolve_stats
 
     dfs = {}
-    for fmt, thresh in (("json", 10**9), ("pq", 1)):
-        monkeypatch.setattr(S, "PARQUET_SEG_MIN_FILES", thresh)
-        t = SnapshotTable.init(spark, str(tmp_path / f"cmp_{fmt}"),
-                               inline_files=1)
+    for layout, inline in (("inline", 10**9), ("pq", 0)):
+        monkeypatch.setattr(S, "INLINE_FILES", inline)
+        t = SnapshotTable.init(spark, str(tmp_path / f"cmp_{layout}"))
         t.append(spark.sql(
             "SELECT id AS k, CAST(id AS DOUBLE) AS x, "
             "TIMESTAMP'2024-01-02 03:04:05' + make_interval(0,0,0,0,0,0,id)"
             " AS ts, DATE'2024-06-01' + CAST(id AS INT) AS d FROM range(50)")
             .coalesce(1), bloom_cols=["k"])
+        assert bool(t.manifest().get("file_segments")) == (layout == "pq")
         stats, blooms = resolve_stats(t.manifest())
-        dfs[fmt] = ({os.path.basename(f): v for f, v in stats.items()},
-                    {os.path.basename(f): v for f, v in blooms.items()})
-    js, pq_ = dfs["json"], dfs["pq"]
+        dfs[layout] = ({os.path.basename(f): v for f, v in stats.items()},
+                       {os.path.basename(f): v for f, v in blooms.items()})
+    js, pq_ = dfs["inline"], dfs["pq"]
     assert list(js[0].values()) == list(pq_[0].values())  # same encodings
     assert list(js[1].values()) == list(pq_[1].values())  # same blooms
 
@@ -2064,15 +2076,7 @@ def test_vectorized_prune_matches_scalar(spark, tmp_path, monkeypatch):
         prune_manifest_files,
     )
 
-    root = str(tmp_path / "vp")
-    os.makedirs(os.path.join(root, "_snapshots", "manifests"))
-    os.makedirs(os.path.join(root, "_snapshots", "files"))
-    tab = SnapshotTable.__new__(SnapshotTable)
-    tab.spark = None
-    tab.path = root
-    tab._root = os.path.join(root, "_snapshots")
-    for fmt_thresh in (1, 10**9):            # parquet AND json segments
-        monkeypatch.setattr(S, "PARQUET_SEG_MIN_FILES", fmt_thresh)
+    for nan_stat in (True, False):
         files = [f"f{i:03d}.parquet" for i in range(40)]
         stats = {}
         for i, f in enumerate(files):
@@ -2081,14 +2085,14 @@ def test_vectorized_prune_matches_scalar(spark, tmp_path, monkeypatch):
                 s["k"] = [i * 10, i * 10 + 9]
             if i % 3 == 0:
                 s["x"] = [float(i), float(i) + 0.5]
-            if i == 7 and fmt_thresh == 1:
-                # NaN stat: never prune.  Only reachable in parquet form
-                # (json.dumps(allow_nan=False) rejects it, and commit-time
-                # _sanitize_stats drops it before any segment write)
+            if i == 7 and nan_stat:
+                # NaN stat: never prune (commit-time _sanitize_stats
+                # drops these; a segment written directly keeps it)
                 s["x"] = [float("nan"), 1.0]
             stats[f] = s
         inline = {"files": files, "stats": stats, "rows": 0}
-        seg = tab._write_segment(1, {"files": files, "stats": stats})
+        seg = S._write_parquet_segment(
+            str(tmp_path / f"seg-{nan_stat}.parquet"), files, stats, {})
         segmented = {"files": files, "file_segments": [seg],
                      "stats": {}, "rows": 0}
         _seg_cache_clear()
@@ -2107,7 +2111,7 @@ def test_vectorized_prune_matches_scalar(spark, tmp_path, monkeypatch):
         for conj in cases:
             got = prune_manifest_files(segmented, conj)
             want = prune_manifest_files(inline, conj)
-            assert got == want, (fmt_thresh, conj, got, want)
+            assert got == want, (nan_stat, conj, got, want)
         # removal lists subtract in the vectorized path too
         segmented["removed_files"] = files[:3]
         got = prune_manifest_files(segmented, [("k", "<", 100)])
