@@ -15,13 +15,14 @@ pass is the only big job.  This module keeps exactly that split:
 - ``word_counts``: the distributed corpus pass (explode + hash groupBy,
   partial-aggregable - one shuffle whose reduce side is vocab-sized).
 - ``bpe_train``: merge learning.  When the vocab fits the driver
-  threshold (default 2M types - word-frequency tables are metadata
-  scale in the codebook/centroid sense, sublinear in corpus bytes), the
-  exact sequential loop runs driver-side.  Above it, a DISTRIBUTED loop
-  runs the same algorithm on a (symbols, count) DataFrame: each
-  iteration is one pair-count aggregation (explode adjacent pairs ->
-  groupBy -> 1-row argmax collect) plus one vocab-sized rewrite of the
-  symbol arrays, checkpointed per iteration to keep the plan flat.
+  threshold (``BPE_DRIVER_VOCAB_MAX``, 2M types - word-frequency tables
+  are metadata scale in the codebook/centroid sense, sublinear in corpus
+  bytes), the exact sequential loop runs driver-side.  Above it, a
+  DISTRIBUTED loop runs the same algorithm on a (symbols, count)
+  DataFrame: each iteration is one pair-count aggregation (explode
+  adjacent pairs -> groupBy -> 1-row argmax collect) plus one
+  vocab-sized rewrite of the symbol arrays, checkpointed per iteration
+  to keep the plan flat.
   Both paths produce IDENTICAL merges: greedy most-frequent pair,
   ties broken (count DESC, left ASC, right ASC), words rewritten
   left-to-right.
@@ -31,6 +32,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Max word types whose merges are learned driver-side; past it the
+# distributed per-iteration loop runs.  Override via
+# bpe.BPE_DRIVER_VOCAB_MAX before calling.
+BPE_DRIVER_VOCAB_MAX = 2_000_000
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -125,7 +131,6 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 50,
     min_pair_count: int = 2,
-    driver_vocab_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus; returns a
     DataFrame ``(rank int, left, right, merged, pair_count long)``.
@@ -133,7 +138,7 @@ def bpe_train(
     The corpus pass is distributed (see :func:`word_counts`); merge
     learning runs driver-side while the vocab is metadata-scale and
     switches to the distributed per-iteration loop above
-    ``driver_vocab_threshold`` word types.  Results are identical -
+    ``BPE_DRIVER_VOCAB_MAX`` word types.  Results are identical -
     pinned by tests at threshold 0 vs default."""
     spark = docs.sparkSession
     wc = word_counts(docs, text_col)
@@ -143,12 +148,12 @@ def bpe_train(
     # exactly the budget the collect path was already granted: fewer
     # rows back means we hold the COMPLETE vocab, one more means
     # distributed.
-    head = wc.limit(driver_vocab_threshold + 1).collect()
+    head = wc.limit(BPE_DRIVER_VOCAB_MAX + 1).collect()
     if not head:
         return spark.createDataFrame(
             [], "rank int, left string, right string, merged string, "
                 "pair_count long")
-    if len(head) <= driver_vocab_threshold:
+    if len(head) <= BPE_DRIVER_VOCAB_MAX:
         vocab = [(r["word"], r["count"]) for r in head]
         merges = _train_sequential(vocab, n_merges, min_pair_count)
     else:

@@ -12,48 +12,43 @@ Algorithm (from the reference's observable behavior, re-derived in Python):
 - boolean -> magic constants 0x172ba9c7 / -0x3a59cb12
 - string/binary -> bytewise shift-add-xor over *signed* UTF-8 bytes
 - timestamp -> (floor-div-seconds << 30 | nanos) then long mix
+- decimal -> exact divideAndRemainder(10^9) -> (quot << 30 | rem), long mix
 - row combine -> 32-bit sum of per-column hashes, then ``s ^ (s >> 8)``
 - NULL hashes to 0 for every type
 - bucket id = pmod(combined, num_buckets)
 
 All arithmetic is two's-complement 32/64-bit with arithmetic right shifts,
-emulated here with numpy wraparound ints.  EVERY type now also has a
-bit-exact pure-JVM expression translation (round-4: string/binary via a
-nibble-stream ``aggregate`` fold, decimal via div/remainder arithmetic,
-float/double via ``reflect`` bit casts) - but dispatch is measurement-
-driven, not purity-driven.  Measured on 600k string keys at sf0.1
-(min-of-2 warm, noop sink): expression fold 14.9s (interpreted HOF lambda,
-~15 expr-node evals per byte), packed-long-state variant 16.4s, per-byte
-``conv`` variant 34.7s, Arrow-batched numpy UDF **1.1s**; float/double
-``reflect`` 4.5-5.4s vs UDF **0.29s**.  Interpreted HOFs never reach
-whole-stage codegen, so "expression" does not imply "fast" - the
-vectorized byte-matrix UDF wins by 7-13x and string-key bucketed writes
-land within ~1.35x of integral keys at sf0.1 (bench row
-``write_bucketed_str``).  Default dispatch therefore uses expressions for
-integral/bool/date/timestamp (true codegen, ~0 cost) and the Arrow UDF
-for string/binary/decimal/float/double; ``force_expr=True`` opts into the
-all-expression plan for environments where Python workers are unavailable
-(correctness identical, tested).
+emulated here with numpy wraparound ints.  Beside the scalar reference
+(``hash_*``), ``odps_hash`` has exactly two forms, chosen from the key
+types and the session's ANSI setting:
+
+- a codegen expression for integral/bool/date/timestamp keys on ANSI-off
+  sessions (whole-stage codegen, ~0 cost over the scan);
+- an ``arrow_udf`` kernel for everything else (string/binary/decimal/
+  float/double keys, or any key on an ANSI session).
+
+Pure-JVM forms of the other types exist (string via an interpreted
+``aggregate`` fold, float/double via ``reflect``) but measured 7-13x
+slower than the Arrow kernel on 600k string keys at sf0.1 (expression
+fold 14.9s vs Arrow 1.1s; ``reflect`` 4.5-5.4s vs 0.29s), so they are
+not kept.
 """
 
 from __future__ import annotations
 
-import os
 from decimal import ROUND_DOWN, Decimal
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 _I32 = np.int32
 _I64 = np.int64
 
 # all arithmetic wraps like Java primitives; overflow warnings are suppressed
 # with a FRESH np.errstate per call (a module-level instance does not survive
-# pickling into pandas-UDF workers)
+# pickling into UDF workers)
 def _ERR():
     return np.errstate(over="ignore")
 
@@ -119,37 +114,13 @@ def hash_string(v: str | bytes | None) -> int:
     return int(h)
 
 
-def _hash_string_batch(values: np.ndarray, null_mask: np.ndarray) -> np.ndarray:
-    """Vectorized hash_string over a batch: bytes are laid out in an
-    (n_rows, max_len) int8 matrix and the Jenkins-style recurrence runs
-    column-wise - max_len vectorized numpy passes instead of a Python loop
-    per byte per row (~50x on realistic key batches, same bits).  Rows
-    shorter than ``j`` freeze their value via np.where, which reproduces the
-    sequential per-row loop exactly.
-
-    Round 6 (VERDICT r5 ask #4, write_bucketed_str 1.84x): the per-row
-    Python encode loop + per-row matrix fill are replaced with one pyarrow
-    conversion (C-speed UTF-8 encode of the whole batch into a single
-    contiguous buffer - pa.string() for str input is ~10x faster than
-    pa.binary()) and a per-position 1-D gather straight off that buffer's
-    offsets, fused into the recurrence loop.  The UDF body no longer
-    touches individual rows at all: measured 0.70s -> 0.17s on a 600k-row
-    12-byte-key batch (encode 0.037 + loop 0.133)."""
-    import pyarrow as pa
-
-    n = len(values)
-    if n == 0:
-        return np.zeros(0, dtype=_I32)
-    try:  # StringType batches are Python str -> utf-8 via the string type
-        arr = pa.array(values, type=pa.string(), from_pandas=True)
-    except (pa.ArrowInvalid, pa.ArrowTypeError):  # BinaryType batches
-        arr = pa.array(values, type=pa.binary(), from_pandas=True)
-    return _hash_string_arrow(arr, null_mask)
-
-
 def _hash_string_arrow(arr, null_mask: np.ndarray) -> np.ndarray:
-    """The fused offsets-gather hash over an arrow string/binary array's
-    raw buffers (shared by the pandas path above and the arrow_udf path)."""
+    """Vectorized hash_string over an arrow string/binary array: the
+    Jenkins-style recurrence runs column-wise over byte positions - max_len
+    numpy passes gathering straight off the offsets+data buffers, no
+    per-row Python objects.  Rows shorter than ``j`` freeze their value via
+    np.where, which reproduces the sequential per-row loop exactly
+    (measured 0.17s on a 600k-row 12-byte-key batch)."""
     import pyarrow as pa
 
     n = len(arr)
@@ -216,8 +187,8 @@ def hash_decimal(v: Decimal | None) -> int:
     BigDecimal.divideAndRemainder is EXACT, so the division must not round
     at Python's default 28-digit context - a decimal(38,*) quotient can
     carry >28 significant digits and the default context would round it
-    before truncation (caught in the round-4 review; the batched
-    _hash_series path always used exact integer math)."""
+    before truncation (caught in the round-4 review; the Arrow kernel's
+    _decimal_packed uses exact integer math)."""
     if v is None:
         return 0
     import decimal as _d
@@ -245,84 +216,35 @@ def combine_hashes(vals: list[int]) -> int:
 
 
 # ---------------------------------------------------------------------------
-# vectorized column hashing
+# Arrow kernel (arrow_udf): every supported type
 # ---------------------------------------------------------------------------
 
-def _hash_series(s: pd.Series, dt: T.DataType, null_mask: np.ndarray | None = None) -> np.ndarray:
-    """Hash one pandas series under its Spark type; returns int32 array.
-
-    ``null_mask`` (from a JVM-side isnull flag) marks nulls when the value
-    series itself has been null-coalesced - integral columns MUST use this
-    path: an int64 Arrow array containing nulls arrives in pandas as
-    float64, silently rounding keys above 2^53 to the wrong bucket."""
-    n = len(s)
-    out = np.zeros(n, dtype=_I32)
-    null = null_mask if null_mask is not None else s.isna().to_numpy()
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        vals = s.fillna(0).to_numpy()
-        if vals.dtype.kind == "f":
-            raise TypeError(
-                "integral hash column arrived as float (nullable int without "
-                "a null flag); use odps_hash, which coalesces JVM-side")
-        vals = vals.astype(_I64)
-        out = _basic_long_hasher(vals)
-    elif isinstance(dt, T.DoubleType):
-        vals = s.fillna(0.0).to_numpy().astype(np.float64).view(_I64)
-        out = _basic_long_hasher(vals)
-    elif isinstance(dt, T.FloatType):
-        vals = s.fillna(0.0).to_numpy().astype(np.float32).view(_I32).astype(_I64)
-        out = _basic_long_hasher(vals)
-    elif isinstance(dt, T.BooleanType):
-        v = s.fillna(False).to_numpy().astype(bool)
-        out = np.where(v, _I32(0x172BA9C7), _I32(-0x3A59CB12))
-    elif isinstance(dt, (T.StringType, T.BinaryType)):
-        out = _hash_string_batch(s.to_numpy(), null)
-    elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        vals = s.to_numpy()
-        micros = vals.astype("datetime64[us]").astype(_I64)
-        out = _hash_timestamp_batch(micros)
-    elif isinstance(dt, T.DateType):
-        days = s.to_numpy().astype("datetime64[D]").astype(_I64)
-        out = _basic_long_hasher(days)
-    elif isinstance(dt, T.DecimalType):
-        # per-row work is pure python-int divides on the unscaled value
-        # (exact at any precision); the 64-bit mix runs once, batched.
-        # ~10x over calling hash_decimal per value, which allocates numpy
-        # arrays and runs the 6-step mix per row.
-        import decimal as _d
-        big_p = 10 ** (9 + dt.scale)
-        big_s = 10 ** dt.scale
-        packed = np.zeros(n, dtype=_I64)
-        with _d.localcontext() as _ctx:
-            _ctx.prec = 200  # scaleb rounds at context precision; a
-            # decimal(38,*) needs >28 digits to stay exact (r4 review)
-            unscaled = [None if (isnull or v is None) else int(v.scaleb(dt.scale))
-                        for v, isnull in zip(s.to_numpy(), null)]
-        for i, u in enumerate(unscaled):
-            if u is None:
-                continue
-            q = -((-u) // big_p) if u < 0 else u // big_p  # trunc toward 0
-            rem = u - q * big_p
-            r = -((-rem) // big_s) if rem < 0 else rem // big_s
-            m = ((q << 30) | (r & 0xFFFFFFFFFFFFFFFF)) & 0xFFFFFFFFFFFFFFFF
-            packed[i] = m - (1 << 64) if m >= (1 << 63) else m
-        out = _basic_long_hasher(packed)
-    else:
-        raise TypeError(f"odps_hash: unsupported bucket column type {dt}")
-    out = out.copy()
-    out[null] = 0
-    return out
+def _decimal_packed(arr) -> np.ndarray:
+    """``quot << 30 | rem`` per row of an arrow decimal128 array, as Java's
+    exact BigDecimal.divideAndRemainder(10^9) with both parts truncated
+    toward zero.  Works on the unscaled Python ints read straight off the
+    16-byte little-endian value buffer, so it stays exact at
+    decimal(38,*); null rows pack 0."""
+    scale = arr.type.scale
+    big_p, big_s = 10 ** (9 + scale), 10 ** scale
+    raw = memoryview(arr.buffers()[1])[16 * arr.offset:]
+    packed = np.zeros(len(arr), dtype=np.uint64)
+    for i in np.flatnonzero(arr.is_valid().to_numpy(zero_copy_only=False)):
+        u = int.from_bytes(raw[16 * i:16 * i + 16], "little", signed=True)
+        q, rem = divmod(abs(u), big_p)
+        q, r = (-q, -(rem // big_s)) if u < 0 else (q, rem // big_s)
+        packed[i] = ((q << 30) | (r & 0xFFFFFFFFFFFFFFFF)) & 0xFFFFFFFFFFFFFFFF
+    return packed.view(_I64)
 
 
 def _hash_arrow_one(arr, dt: T.DataType) -> np.ndarray:
     """Hash one pyarrow Array under its Spark type; returns int32 ndarray.
 
-    Arrow-native twin of ``_hash_series`` for the ``arrow_udf`` dispatch
-    path (round 6): values never materialize as Python objects - strings
-    hash straight off the offsets+data buffers, numerics via zero-ish-copy
-    ``to_numpy``.  Nulls come from the arrow validity bitmap, so the
-    int64-null->float64 pandas corruption class cannot occur here and no
-    JVM-side isnull flag columns are needed."""
+    Values never materialize as Python objects (decimals aside, whose
+    exact div/rem needs Python ints): strings hash straight off the
+    offsets+data buffers, numerics via zero-ish-copy ``to_numpy``.  Nulls
+    come from the arrow validity bitmap, so int64 keys above 2^53 stay
+    exact even in columns holding nulls."""
     import pyarrow as pa
 
     null = arr.is_null().to_numpy(zero_copy_only=False)
@@ -351,31 +273,30 @@ def _hash_arrow_one(arr, dt: T.DataType) -> np.ndarray:
         vals = (arr.fill_null(0.0).to_numpy(zero_copy_only=False)
                 .astype(np.float32).view(_I32).astype(_I64))
         out = _basic_long_hasher(vals)
-    else:  # pragma: no cover - guarded by _arrow_capable
+    elif isinstance(dt, T.DecimalType):
+        out = _basic_long_hasher(_decimal_packed(arr))
+    else:  # pragma: no cover - guarded by odps_hash
         raise TypeError(f"odps_hash arrow path: unsupported type {dt}")
     out = out.copy()
     out[null] = 0
     return out
 
 
-def _arrow_capable(dt: T.DataType) -> bool:
-    """Types the arrow_udf dispatch handles (everything but decimal, which
-    needs exact unscaled-int division and stays on the pandas path)."""
-    return isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType,
-                           T.LongType, T.BooleanType, T.DateType,
-                           T.TimestampType, T.TimestampNTZType,
-                           T.StringType, T.BinaryType,
-                           T.FloatType, T.DoubleType))
+# every bucket key type the Arrow kernel hashes
+_ARROW_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                T.BooleanType, T.DateType, T.TimestampType,
+                T.TimestampNTZType, T.StringType, T.BinaryType,
+                T.FloatType, T.DoubleType, T.DecimalType)
 
 
 # ---------------------------------------------------------------------------
-# pure-expression hash path (JVM codegen, no Python)
+# codegen expression (JVM, no Python)
 #
 # Requires a session with spark.sql.ansi.enabled=false: Java's wraparound
 # + and * are then native long semantics and the whole hash runs inside
 # whole-stage codegen - measured ~0 cost on top of the scan vs ~0.4s/600k
-# rows for the Arrow-batched pandas UDF.  Under ANSI (which throws on long
-# overflow) odps_hash transparently falls back to the UDF.
+# rows for the Arrow kernel.  Under ANSI (which throws on long overflow)
+# odps_hash uses the Arrow kernel instead.
 #
 # Two rejected ANSI-safe variants, for the record (both measured slower
 # than the UDF): (a) 32-bit-half overflow emulation inlined - Catalyst
@@ -404,69 +325,14 @@ def _mix64_expr(l: Column) -> Column:
     return _sign_extend_32(l)
 
 
-# default-dispatch expression types: true whole-stage-codegen translations
-# with ~zero cost over the scan.  String/binary/decimal/float/double ALSO
-# have expression translations (below) but their JVM forms are interpreted
-# (HOF fold / reflect) and measured 7-13x slower than the Arrow UDF, so
-# they only engage under force_expr.
+# key types with a whole-stage-codegen translation (~zero cost over the scan)
 _EXPR_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                T.BooleanType, T.DateType, T.TimestampType, T.TimestampNTZType)
-
-# decimal expression path needs quotient = v div 10^9 to fit a long with
-# room for exact decimal re-multiplication; precision-9 <= 18 guarantees it
-_DECIMAL_EXPR_MAX_PRECISION = 27
-
-
-def _expr_capable(dt: T.DataType, force: bool = False) -> bool:
-    if isinstance(dt, _EXPR_TYPES):
-        return True
-    if not force:
-        return False
-    if isinstance(dt, T.DecimalType):
-        return dt.precision <= _DECIMAL_EXPR_MAX_PRECISION
-    return isinstance(dt, (T.StringType, T.BinaryType,
-                           T.FloatType, T.DoubleType))
-
-
-def _sext32_sql(e: str) -> str:
-    return f"shiftright(shiftleft({e}, 32), 32)"
-
-
-def _string_hash_sql(bin_sql: str) -> str:
-    """Bytewise shift-add-xor hash over a BINARY-typed SQL expression, as one
-    JVM ``aggregate`` over the hex-split nibble stream.
-
-    Layout rationale: there is no byte-accessor for BINARY in Spark SQL, and
-    referencing the value inside a lambda body re-evaluates it per element
-    (interpreted HOFs do no subexpression caching), so the one collection
-    expression an ``aggregate`` evaluates ONCE is ``split(hex(bytes), '')``
-    - the nibble stream.  The fold carries (h, hi-nibble, odd?) in a struct
-    and applies the per-byte recurrence (hash_string: h+=b; h+=h<<10; h^=h>>6
-    on wrapping int32, emulated with sign-extended longs) on every odd
-    nibble.  O(len) work per row, all JVM-side."""
-    nib = "(instr('0123456789ABCDEF', c) - 1)"
-    b_uns = "(acc.hi * 16 + CAST((instr('0123456789ABCDEF', c) - 1) AS BIGINT))"
-    b = f"(CASE WHEN {b_uns} > 127 THEN {b_uns} - 256 ELSE {b_uns} END)"
-    t1 = _sext32_sql(f"(acc.h + {b})")
-    t2 = _sext32_sql(f"({t1} + shiftleft({t1}, 10))")
-    h_step = f"({t2} ^ shiftright({t2}, 6))"
-    t3 = _sext32_sql("(acc.h + shiftleft(acc.h, 3))")
-    t4 = f"({t3} ^ shiftright({t3}, 11))"
-    h_fin = _sext32_sql(f"({t4} + shiftleft({t4}, 15))")
-    return f"""aggregate(
-      filter(split(hex({bin_sql}), ''), c -> c <> ''),
-      named_struct('h', CAST(0 AS BIGINT), 'hi', CAST(0 AS BIGINT), 'odd', false),
-      (acc, c) -> CASE WHEN NOT acc.odd
-        THEN named_struct('h', acc.h, 'hi', CAST({nib} AS BIGINT), 'odd', true)
-        ELSE named_struct('h', {h_step}, 'hi', CAST(0 AS BIGINT), 'odd', false)
-      END,
-      acc -> {h_fin})"""
 
 
 def _hash_col_expr(c: str, dt: T.DataType) -> Column:
     """Per-column ODPS hash as a pure expression (32-bit-range long)."""
     col = F.col(c)
-    name = c.replace("`", "``")
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         h = _mix64_expr(col.cast("long"))
     elif isinstance(dt, T.BooleanType):
@@ -476,36 +342,13 @@ def _hash_col_expr(c: str, dt: T.DataType) -> Column:
     elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         # floorDiv/floorMod with integer ops only (SQL `div` + pmod): double
         # division would round near second boundaries for large epochs
-        us = f"unix_micros(cast(`{name}` as timestamp))"
+        us = f"unix_micros(cast(`{c.replace('`', '``')}` as timestamp))"
         packed = F.expr(
             f"shiftleft((({us}) - pmod({us}, 1000000)) div 1000000, 30)"
             f" | (pmod({us}, 1000000) * 1000)"
         )
         h = _mix64_expr(packed)
-    elif isinstance(dt, (T.StringType, T.BinaryType)):
-        bin_sql = (f"encode(`{name}`, 'UTF-8')" if isinstance(dt, T.StringType)
-                   else f"`{name}`")
-        h = F.expr(_string_hash_sql(bin_sql))
-    elif isinstance(dt, T.DoubleType):
-        # doubleToLongBits via JVM reflection: interpreted but JVM-side, and
-        # bit-exact incl. canonical-NaN (matches numpy's .view(int64))
-        h = _mix64_expr(F.expr(
-            f"CAST(reflect('java.lang.Double', 'doubleToLongBits', `{name}`)"
-            " AS BIGINT)"))
-    elif isinstance(dt, T.FloatType):
-        h = _mix64_expr(F.expr(
-            f"CAST(reflect('java.lang.Float', 'floatToIntBits', `{name}`)"
-            " AS BIGINT)"))
-    elif isinstance(dt, T.DecimalType):
-        # divideAndRemainder(10^9) with truncation toward zero: SQL `div`
-        # truncates, and decimal->long CAST truncates (ANSI-off).  The
-        # remainder is computed in decimal, so q*10^9 never overflows a
-        # long (precision gate keeps q itself long-ranged).
-        q = f"(`{name}` div 1000000000)"
-        r = (f"CAST(`{name}` - CAST({q} AS DECIMAL(38,0)) * 1000000000"
-             " AS BIGINT)")
-        h = _mix64_expr(F.expr(f"shiftleft({q}, 30) | {r}"))
-    else:  # pragma: no cover - guarded by caller
+    else:  # pragma: no cover - guarded by odps_hash
         raise TypeError(f"odps_hash expression path: unsupported type {dt}")
     return F.when(col.isNull(), F.lit(0).cast("long")).otherwise(h)
 
@@ -520,103 +363,39 @@ def odps_hash_expr(cols: list[str], dtypes: list[T.DataType]) -> Column:
     return s32.bitwiseXOR(F.shiftright(s32, 8)).cast("int")
 
 
-def odps_hash(df: DataFrame, cols: list[str],
-              force_expr: bool | None = None) -> Column:
+def odps_hash(df: DataFrame, cols: list[str]) -> Column:
     """Column expression: ODPS row hash of ``cols`` (int32).
 
     Usage: ``df.withColumn("h", odps_hash(df, ["k1", "k2"]))``.
 
     Dispatch: when the session runs ANSI-off (our engine sessions do) and
-    every column type has a *codegen* expression translation (integral/
-    boolean/date/timestamp - the overwhelmingly common bucket keys) the
-    hash is a pure JVM expression inside whole-stage codegen.  Otherwise
-    (ANSI session, or string/decimal/float/double keys) it uses the
-    Arrow-batched pandas UDF - same bits either way, and measured 7-13x
-    faster than the interpreted-HOF/reflect expression forms of those
-    types (module docstring has the numbers).  ``force_expr=True`` selects
-    the all-expression plan regardless (for Python-worker-less
-    deployments); it raises if some column type has no expression form.
-
-    UDF path: integral columns are null-coalesced JVM-side and accompanied
-    by an isnull flag so the Arrow->pandas transfer keeps exact int64 (a
-    nullable int column otherwise becomes float64 and corrupts keys above
-    2^53).
-
-    Deployment switch: ``force_expr`` defaults to the
-    ``SPARK_GRAFT_FORCE_EXPR_HASH`` environment variable (1/true), so
-    Python-worker-less clusters flip EVERY hash consumer - including
-    ``catalog.insert``'s bucketed-write routing - to the all-expression
-    plan without touching call sites; bucket layouts stay bit-identical
-    across the switch (tested in test_hashing.py)."""
-    if force_expr is None:
-        force_expr = os.environ.get(
-            "SPARK_GRAFT_FORCE_EXPR_HASH", "").lower() in ("1", "true")
+    every column type is integral/boolean/date/timestamp - the
+    overwhelmingly common bucket keys - the hash is a pure JVM expression
+    inside whole-stage codegen.  Otherwise (ANSI session, or string/
+    binary/decimal/float/double keys) it is the Arrow kernel.  Same bits
+    either way."""
     dtypes = [df.schema[c].dataType for c in cols]
+    bad = [c for c, dt in zip(cols, dtypes) if not isinstance(dt, _ARROW_TYPES)]
+    if bad:
+        raise TypeError(f"odps_hash: unsupported bucket column types for {bad}")
     ansi_off = (
         df.sparkSession.conf.get("spark.sql.ansi.enabled", "true") == "false"
     )
-    if force_expr:
-        if not ansi_off:
-            raise ValueError(
-                "odps_hash(force_expr=True) needs an ANSI-off session: the "
-                "expression mix relies on wraparound long arithmetic")
-        bad = [c for c, dt in zip(cols, dtypes) if not _expr_capable(dt, force=True)]
-        if bad:
-            raise TypeError(
-                f"odps_hash(force_expr=True): no expression translation for "
-                f"columns {bad}")
+    if ansi_off and all(isinstance(dt, _EXPR_TYPES) for dt in dtypes):
         return odps_hash_expr(cols, dtypes)
-    if ansi_off and all(_expr_capable(dt) for dt in dtypes):
-        return odps_hash_expr(cols, dtypes)
-    if all(_arrow_capable(dt) for dt in dtypes):
-        # Arrow-native UDF (round 6, VERDICT r5 ask #4): values reach
-        # Python as pyarrow Arrays - no pandas conversion, so string
-        # batches never materialize per-row Python str objects and hash
-        # straight off the arrow offsets+data buffers.  Measured at sf0.1:
-        # write_bucketed_str 1.90s -> ~1.3s (pandas_udf path was the
-        # remaining 1.5x-bar blocker).  Null handling rides the validity
-        # bitmap, so no isnull flag columns are needed.
-        from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.functions import arrow_udf
 
-        @arrow_udf(T.IntegerType())
-        def _ha(*arrs):
-            import pyarrow as pa
+    @arrow_udf(T.IntegerType())
+    def _ha(*arrs):
+        import pyarrow as pa
 
-            with _ERR():
-                acc = np.zeros(len(arrs[0]), dtype=_I32)
-                for arr, dt in zip(arrs, dtypes):
-                    acc += _hash_arrow_one(arr, dt)
-                return pa.array(acc ^ (acc >> _I32(8)), type=pa.int32())
-
-        return _ha(*[F.col(c) for c in cols])
-    flagged = [
-        isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
-        for dt in dtypes
-    ]
-
-    @pandas_udf(T.IntegerType())
-    def _h(*series: pd.Series) -> pd.Series:
         with _ERR():
-            acc = np.zeros(len(series[0]), dtype=_I32)
-            i = 0
-            for dt, has_flag in zip(dtypes, flagged):
-                if has_flag:
-                    vals, nulls = series[i], series[i + 1]
-                    i += 2
-                    acc += _hash_series(vals, dt, nulls.to_numpy().astype(bool))
-                else:
-                    acc += _hash_series(series[i], dt)
-                    i += 1
-            return pd.Series(acc ^ (acc >> _I32(8)))
+            acc = np.zeros(len(arrs[0]), dtype=_I32)
+            for arr, dt in zip(arrs, dtypes):
+                acc += _hash_arrow_one(arr, dt)
+            return pa.array(acc ^ (acc >> _I32(8)), type=pa.int32())
 
-    args: list[Column] = []
-    for c, has_flag in zip(cols, flagged):
-        if has_flag:
-            args.append(F.coalesce(F.col(c), F.lit(0)).alias(f"__v_{c}"))
-            args.append(F.isnull(F.col(c)).alias(f"__n_{c}"))
-        else:
-            args.append(F.col(c))
-    return _h(*args)
+    return _ha(*[F.col(c) for c in cols])
 
 
 def odps_bucket_id(df: DataFrame, cols: list[str], num_buckets: int) -> Column:

@@ -330,16 +330,8 @@ def semantic_dedup(
     comp = connected_components(pairs, "id1", "id2")
     drop = (comp.where(F.col("node") != F.col("component"))
             .select(F.col("node").alias("_drop_id")))
-    return df.join(
-        F.broadcast(drop) if _small(drop) else drop,
-        df[id_col] == F.col("_drop_id"), "left_anti")
-
-
-def _small(df: DataFrame) -> bool:
-    """Near-dup drop lists are usually a small fraction of the corpus; treat
-    as broadcastable unless provably huge (heuristic only - the anti-join is
-    correct either way, AQE re-plans on the real size)."""
-    return True
+    return df.join(F.broadcast(drop), df[id_col] == F.col("_drop_id"),
+                   "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -625,20 +617,6 @@ def det_kmeans_assign_best(vec: Column, centers: list[list[float]]) -> Column:
 # That makes them drop-in replacements for oracle-checked queries: the
 # unrounded doubles match the JVM fold bit-for-bit (rounding stays
 # JVM-side).  ~20x faster on the det-kmeans query family at sf0.1.
-
-import pandas as _pd  # noqa: E402  (kept local to avoid top-level rename)
-
-
-def _row_groups(vals: list) -> dict[int, tuple[list[int], np.ndarray]]:
-    """Group row indices by vector length -> (indices, (g, len) matrix).
-    Rows are vectorized per length group so mixed-dim batches still run
-    columnwise."""
-    by_len: dict[int, list[int]] = {}
-    for i, v in enumerate(vals):
-        by_len.setdefault(len(v), []).append(i)
-    return {ln: (idx, np.stack([vals[i] for i in idx]))
-            for ln, idx in by_len.items()}
-
 
 def _arrow_list_parts(arr):
     """(null_mask, starts, lens, flat_float64) views of an arrow list array

@@ -56,8 +56,9 @@ def get_spark(
         # ODPS DATETIME is millis / TIMESTAMP is micros (SURVEY 1.2); Spark
         # micros covers both - see types.datetime_millis for the ms surface.
         # Java-style wraparound arithmetic (Spark 3.x default): lets the
-        # ODPS bucket hash run as pure codegen expressions (operators/
-        # hashing.py); on an ANSI session odps_hash falls back to a UDF.
+        # ODPS bucket hash of integral/bool/date/timestamp keys run as pure
+        # codegen expressions (operators/hashing.py); on an ANSI session
+        # odps_hash uses its Arrow kernel for every key type.
         .config("spark.sql.ansi.enabled", "false")
         # --- adaptive execution ------------------------------------------
         .config("spark.sql.adaptive.enabled", "true")
@@ -237,9 +238,8 @@ _SCAN_BYTES_EST: dict[int, int] = {}
 # showed q1 FASTER on 8 cores (ratio 0.66) with the unconditional
 # repartition(32) over an 11 MB scan.  At production widths
 # bytes/64MB >> core count, the cap exceeds ``target`` and behavior is
-# unchanged.  Env-overridable so cluster profiles can tune it.
-ENSURE_PARALLELISM_BYTES_PER_TASK = int(os.environ.get(
-    "SPARK_GRAFT_BYTES_PER_TASK", str(64 << 20)))
+# unchanged.
+ENSURE_PARALLELISM_BYTES_PER_TASK = 64 << 20
 
 
 def estimated_scan_splits(df) -> int | None:

@@ -853,11 +853,11 @@ def write_avro(df: DataFrame, path: str, codec: str = "deflate") -> list[str]:
 
     Integral-null guard (ADVICE r6): a nullable int/long column holding
     any null reaches pandas as float64, and values at/above 2^53 are no
-    longer exact - the same corruption class hashing._hash_series treats
-    as a hard error.  Such columns are re-typed to pandas nullable Int64
-    before encoding; if any value's magnitude is already >= 2^53 (i.e.
-    the float conversion may have rounded it) the write raises instead
-    of silently corrupting."""
+    longer exact - the corruption class the ODPS hash avoids by reading
+    Arrow arrays with their validity bitmap instead of pandas.  Such
+    columns are re-typed to pandas nullable Int64 before encoding; if any
+    value's magnitude is already >= 2^53 (i.e. the float conversion may
+    have rounded it) the write raises instead of silently corrupting."""
     import shutil
 
     import numpy as np

@@ -4,12 +4,12 @@ Arrow-batched column UDF vs the scalar path."""
 
 from __future__ import annotations
 
+import decimal
+import math
 import os
 import random
 from datetime import datetime, timezone
 from decimal import Decimal
-
-import pytest
 
 from aliyun_maxcompute_data_collectors_spark.operators import hashing as H
 
@@ -124,6 +124,23 @@ def test_column_udf_matches_scalar(spark):
         ]
         assert r["h"] == H.combine_hashes(parts)
 
+    # adversarial single-key inputs: unicode, empty, every byte value,
+    # signed zeros, NaN, infinities, subnormals
+    svals = ["", "a", "abc", "hello world", "列七", "ünïcode", "x" * 300,
+             "\t\n", None, "€𝄞 mixed", "ORD-12345-6"]
+    bvals = [b"", b"\x00", b"\xff\x80\x7f", bytes(range(256)), None]
+    fvals = [0.0, -0.0, 1.5, -1.5, math.pi, float("inf"), float("-inf"),
+             float("nan"), 1e-310, 1e-40, None]
+    for vals, ddl, ref in [(svals, "string", H.hash_string),
+                           (bvals, "binary", H.hash_string),
+                           (fvals, "double", H.hash_double),
+                           (fvals, "float", H.hash_float)]:
+        one = spark.createDataFrame([(v,) for v in vals], f"x {ddl}")
+        got = one.withColumn("h", H.odps_hash(one, ["x"])).collect()
+        assert len(got) == len(vals)
+        for r in got:
+            assert r["h"] == H.combine_hashes([ref(r["x"])]), (ddl, r["x"])
+
 
 def test_bucket_id_range(spark):
     df = spark.range(1000).selectExpr("id", "CAST(id AS STRING) AS s")
@@ -232,112 +249,91 @@ def test_minhash_hash_fn_variants(spark):
         minhash_signature(df, "doc_id", "text", hash_fn="sha1").collect()
 
 
-def test_expr_path_string_binary_parity(spark):
-    """force_expr string/binary hash (nibble-stream aggregate fold) must be
-    bit-identical to the scalar reference, unicode and empty included."""
-    vals = ["", "a", "abc", "hello world", "列七", "ünïcode", "x" * 300,
-            "\t\n", None, "€𝄞 mixed", "ORD-12345-6"]
-    df = spark.createDataFrame([(v,) for v in vals], "s string")
-    col = H.odps_hash(df, ["s"], force_expr=True)
-    plan = df.withColumn("h", col)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan  # JVM-side, no Python worker
-    for r in df.withColumn("h", col).collect():
-        assert r["h"] == H.combine_hashes([H.hash_string(r["s"])]), r["s"]
-
-    bvals = [b"", b"\x00", b"\xff\x80\x7f", bytes(range(256)), None]
-    bdf = spark.createDataFrame([(v,) for v in bvals], "b binary")
-    bcol = H.odps_hash(bdf, ["b"], force_expr=True)
-    for r in bdf.withColumn("h", bcol).collect():
-        assert r["h"] == H.combine_hashes([H.hash_string(r["b"])]), r["b"]
-
-
-def test_expr_path_decimal_float_double_parity(spark):
-    """force_expr decimal (div/rem arithmetic) and float/double (reflect
-    bit casts) must match the scalar reference on adversarial values."""
-    import math
-
-    dvals = [Decimal("0"), Decimal("1.5"), Decimal("-1.5"), Decimal("123.45"),
-             Decimal("-9999999999999999.99"),
-             Decimal("1234567890123456789.123456"),
-             Decimal("-1234567890123456789.123456"), None]
-    df = spark.createDataFrame([(v,) for v in dvals], "d decimal(27,6)")
-    for r in df.withColumn("h", H.odps_hash(df, ["d"], force_expr=True)).collect():
-        assert r["h"] == H.combine_hashes([H.hash_decimal(r["d"])]), r["d"]
-
-    fvals = [0.0, -0.0, 1.5, -1.5, math.pi, float("inf"), float("-inf"),
-             float("nan"), 1e-310, None]
-    xdf = spark.createDataFrame([(v,) for v in fvals], "x double")
-    for r in xdf.withColumn("h", H.odps_hash(xdf, ["x"], force_expr=True)).collect():
-        assert r["h"] == H.combine_hashes([H.hash_double(r["x"])]), r["x"]
-    fdf = spark.createDataFrame([(v,) for v in fvals], "x float")
-    for r in fdf.withColumn("h", H.odps_hash(fdf, ["x"], force_expr=True)).collect():
-        assert r["h"] == H.combine_hashes([H.hash_float(r["x"])]), r["x"]
-
-
-def test_expr_force_guards(spark):
-    """force_expr raises on unsupported types (decimal beyond the precision
-    gate keeps its exactness by refusing the long-ranged quotient path)."""
-    df = spark.createDataFrame([(Decimal("1"),)], "d decimal(38,6)")
-    with pytest.raises(TypeError, match="no expression translation"):
-        H.odps_hash(df, ["d"], force_expr=True)
-
-
 def test_udf_decimal_vectorized_parity(spark):
-    """The batched int-math decimal UDF path == scalar hash_decimal on a
-    spread of scales/signs (default dispatch for decimal is the UDF)."""
+    """The Arrow kernel's exact unscaled-int decimal path == scalar
+    hash_decimal across precisions up to decimal(38,*), signs, extremes and
+    nulls, with Arrow batches split mid-column."""
     import random as _r
 
+    import pyarrow as pa
+
     rng = _r.Random(11)
-    vals = [Decimal(rng.randrange(-10**20, 10**20)) / Decimal(10**6)
-            for _ in range(300)] + [None, Decimal("0")]
-    df = spark.createDataFrame([(v,) for v in vals], "d decimal(30,6)")
-    col = H.odps_hash(df, ["d"])  # decimal(30) > expr gate -> UDF even forced off
-    for r in df.withColumn("h", col).collect():
-        assert r["h"] == H.combine_hashes([H.hash_decimal(r["d"])]), r["d"]
+    top38 = 10 ** 38 - 1
+    exact = decimal.Context(prec=100)  # the default 28 digits would round
+
+    def scaled(u, s):
+        return Decimal(u).scaleb(-s, exact)
+
+    cases = {
+        "decimal(30,6)": [Decimal(rng.randrange(-10**20, 10**20)) / Decimal(10**6)
+                          for _ in range(300)] + [None, Decimal("0")],
+        "decimal(27,6)": [Decimal("0"), Decimal("1.5"), Decimal("-1.5"),
+                          Decimal("123.45"), Decimal("-9999999999999999.99"),
+                          Decimal("1234567890123456789.123456"),
+                          Decimal("-1234567890123456789.123456"),
+                          Decimal("999999999999999999999.999999"),
+                          Decimal("-999999999999999999999.999999"), None],
+        "decimal(38,0)": [Decimal(top38), Decimal(-top38), Decimal(0),
+                          Decimal(10 ** 9), Decimal(-(10 ** 9) + 1), None]
+                         + [Decimal(rng.randrange(-top38, top38))
+                            for _ in range(40)],
+        "decimal(38,18)": [scaled(top38, 18), scaled(-top38, 18),
+                           Decimal("1E-18"), Decimal("-1E-18"), None]
+                          + [scaled(rng.randrange(-top38, top38), 18)
+                             for _ in range(40)],
+        "decimal(18,2)": [Decimal("9999999999999999.99"),
+                          Decimal("-9999999999999999.99"), Decimal("0.01"),
+                          Decimal("-0.01"), None] + [
+                          scaled(rng.randrange(-10**18 + 1, 10**18), 2)
+                          for _ in range(40)],
+    }
+    prior = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        for ddl, vals in cases.items():
+            df = spark.createDataFrame([(v,) for v in vals], f"d {ddl}")
+            col = H.odps_hash(df, ["d"])
+            plan = df.withColumn("h", col)._jdf.queryExecution() \
+                .executedPlan().toString()
+            assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
+            got = df.withColumn("h", col).collect()
+            assert len(got) == len(vals)
+            for r in got:
+                assert r["h"] == H.combine_hashes([H.hash_decimal(r["d"])]), \
+                    (ddl, r["d"])
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prior)
+
+    # a sliced arrow array (non-zero offset) reads the right value slots
+    vals = cases["decimal(38,18)"]
+    arr = pa.array(vals, type=pa.decimal128(38, 18)).slice(3)
+    got = H._hash_arrow_one(arr, H.T.DecimalType(38, 18))
+    assert got.tolist() == [H.hash_decimal(v) for v in vals[3:]]
 
 
-def test_force_expr_bucketed_write_layout_identical(spark, tmp_path, monkeypatch):
-    """Deployment proof for Python-worker-less clusters (VERDICT r4 ask #7):
-    a STRING-bucketed table written under ``SPARK_GRAFT_FORCE_EXPR_HASH=1``
-    (all-expression hash, no pandas UDF anywhere in the write plan) lays
-    out byte-identical buckets - same rows routed to the same bucket
-    directories - as the default Arrow-UDF dispatch."""
+def test_string_bucketed_write_layout_matches_scalar(spark, tmp_path):
+    """Every row of a STRING-bucketed ``catalog.insert`` lands in the bucket
+    directory the scalar reference names: ``combine_hashes([hash_string
+    (name)]) % 8`` (NULL keys hash to 0 -> bucket 0)."""
     from aliyun_maxcompute_data_collectors_spark.catalog import BucketSpec, OdpsCatalog
 
     rows = [(f"name-{i:04d}" if i % 7 else None, i) for i in range(300)]
     df = spark.createDataFrame(rows, "name string, n long")
-    spec = lambda: BucketSpec("hash", 8, ["name"], [("n", "ASC")])
-
-    def write(cat_dir, env):
-        if env:
-            monkeypatch.setenv("SPARK_GRAFT_FORCE_EXPR_HASH", "1")
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_FORCE_EXPR_HASH", raising=False)
-        cat = OdpsCatalog(spark, str(tmp_path / cat_dir))
-        cat.create_table("bt", [("name", "STRING"), ("n", "BIGINT")],
-                         bucket=spec())
-        cat.insert("bt", df)
-        ddir = cat.data_dir("bt")
-        layout = {}
-        for b in sorted(d for d in os.listdir(ddir)
-                        if d.startswith("__odps_bucket__=")):
-            got = spark.read.parquet(os.path.join(ddir, b)) \
-                .select("name", "n").collect()
-            layout[b] = sorted(((r["name"], r["n"]) for r in got),
-                               key=lambda t: (t[0] is None, t[0] or "", t[1]))
-        return layout
-
-    # env switch engages the expression plan: no Python UDF in the routing
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_EXPR_HASH", "1")
-    routed = df.withColumn("b", H.odps_bucket_id(df, ["name"], 8))
-    assert "pythonUDF" not in routed._jdf.queryExecution().executedPlan().toString(), \
-        "force-expr routing must not invoke a Python UDF"
-    monkeypatch.delenv("SPARK_GRAFT_FORCE_EXPR_HASH", raising=False)
-
-    udf_layout = write("wh_udf", env=False)
-    expr_layout = write("wh_expr", env=True)
-    assert udf_layout and set(udf_layout) == set(expr_layout)
-    assert udf_layout == expr_layout
+    cat = OdpsCatalog(spark, str(tmp_path / "wh"))
+    cat.create_table("bt", [("name", "STRING"), ("n", "BIGINT")],
+                     bucket=BucketSpec("hash", 8, ["name"], [("n", "ASC")]))
+    cat.insert("bt", df)
+    ddir = cat.data_dir("bt")
+    dirs = [d for d in os.listdir(ddir) if d.startswith("__odps_bucket__=")]
+    assert len(dirs) > 4  # 300 distinct keys spread over the 8 buckets
+    seen = []
+    for b in dirs:
+        bucket = int(b.split("=", 1)[1])
+        for r in spark.read.parquet(os.path.join(ddir, b)).collect():
+            assert bucket == H.combine_hashes([H.hash_string(r["name"])]) % 8, \
+                (b, r["name"])
+            seen.append((r["name"], r["n"]))
+    assert sorted(seen, key=lambda t: t[1]) == rows
 
 
 def test_minhash_lsh_hash_fn_pair_parity(spark):

@@ -165,7 +165,7 @@ def test_bm25_scores_match_reference_formula(spark):
     assert got[1] > got[2]
 
 
-def test_bpe_train_reference_and_path_equivalence(spark, sf_dir):
+def test_bpe_train_reference_and_path_equivalence(spark, sf_dir, monkeypatch):
     from aliyun_maxcompute_data_collectors_spark.operators import bpe
     from aliyun_maxcompute_data_collectors_spark.session import load_tables
 
@@ -182,8 +182,8 @@ def test_bpe_train_reference_and_path_equivalence(spark, sf_dir):
     docs = load_tables(spark, sf_dir, ["documents"])["documents"] \
         .where(F.col("doc_id") % 10 == 0)
     a = [tuple(r) for r in bpe.bpe_train(docs, n_merges=12).collect()]
-    b = [tuple(r) for r in bpe.bpe_train(
-        docs, n_merges=12, driver_vocab_threshold=0).collect()]
+    monkeypatch.setattr(bpe, "BPE_DRIVER_VOCAB_MAX", 0)
+    b = [tuple(r) for r in bpe.bpe_train(docs, n_merges=12).collect()]
     assert a == b and len(a) == 12
 
 
